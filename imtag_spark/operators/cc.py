@@ -29,6 +29,7 @@ Scale design notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import time
 from collections.abc import Iterator
 
 import numpy as np
@@ -222,17 +223,35 @@ def local_contract(
     Mirrors the reference's 32-bit label representation
     (/root/reference/src/disjoint_set.hpp:24, uint32_t parents;
     src/SegmentImageImpl.hpp:12 label_t = uint16/uint32): id spaces that
-    fit 32 bits never pay 64-bit traffic. Safe by construction: the
-    session runs ANSI mode, so an out-of-range id makes the cast THROW —
-    a wrong bound can never silently wrap into a wrong label. Full-range
+    fit 32 bits never pay 64-bit traffic. Safe by construction under any
+    session conf: every id is range-checked before the cast and an
+    out-of-range id raises (``raise_error``) — a wrong bound can never
+    silently wrap into a wrong label, with ANSI mode on or off. Full-range
     ids (e.g. xxhash64-derived corpus vertices) take the int64 path.
     """
     if narrow:
-        edges = edges.select(
-            F.col("src").cast("int").alias("src"),
-            F.col("dst").cast("int").alias("dst"),
-        )
+        edges = edges.select(_checked_int32("src"), _checked_int32("dst"))
     return edges.mapInArrow(_local_contract_fn(chunk), schema=EDGE_SCHEMA)
+
+
+def _checked_int32(name: str):
+    """``name`` cast to INT, raising on an id outside the int32 range
+    (a non-ANSI cast would wrap it silently)."""
+    col = F.col(name)
+    return (
+        F.when(
+            (col < -(2**31)) | (col >= 2**31),
+            F.raise_error(
+                F.concat(
+                    F.lit(f"narrow int32 cast: {name} id "),
+                    col.cast("string"),
+                    F.lit(" is outside the int32 range"),
+                )
+            ),
+        )
+        .otherwise(col.cast("int"))
+        .alias(name)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -313,8 +332,8 @@ def _oriented_edges(edges: DataFrame, n_part: int) -> DataFrame:
     """Orient each edge once as ``(c=min endpoint, n=max endpoint)``,
     hash(c)-partitioned — the E-row working set the big-graph round builds
     on. NOT persisted: the whole round executes as ONE certificate-driven
-    job, so the three consumers of this exchange (the two neighborhood-min
-    aggregates and the large-star join) all read the same shuffle output
+    job, so the two consumers of this exchange (the n-side neighborhood-min
+    aggregate and the large-star join) both read the same shuffle output
     via ReusedExchange — a block-manager cache of the same E rows would
     only add a deserialized copy and its GC bill (measured: 27-56 % of
     executor time in GC during the cache-build stages at 64M edges)."""
@@ -400,7 +419,7 @@ def _star_contract_round_reuse(
 
     NOTHING here is persisted. The whole round executes as the single job
     driven by the convergence-certificate action, and every multiply-
-    consumed subtree (the oriented exchange: 3 consumers; the large-star
+    consumed subtree (the oriented exchange: 2 consumers; the large-star
     exchange: 1) sits behind an exchange, which Spark serves to all
     consumers in one job via ReusedExchange. The r2 design persisted the
     E-row sets on top of that; the redundant deserialized copies showed up
@@ -618,6 +637,61 @@ def _chain_patch(stepped: DataFrame) -> DataFrame | None:
     )
 
 
+def _init_stats(df: DataFrame, narrow: bool, transit: str) -> tuple[int, bool]:
+    """One job over ``df``: its row count, and whether the int32 Arrow
+    transit applies — the id range decides unless the caller already
+    asserted it (``narrow``) or the kill switch is ``off``."""
+    stats = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(F.least("src", "dst")).alias("lo"),
+        F.max(F.greatest("src", "dst")).alias("hi"),
+    ).collect()[0]
+    if transit != "off" and not narrow and stats["lo"] is not None:
+        narrow = -(2**31) <= int(stats["lo"]) and int(stats["hi"]) < 2**31
+    return int(stats["n"]), narrow
+
+
+def _solve_one_pass(
+    raw: DataFrame,
+    owned: DataFrame | None,
+    narrow: bool,
+    chunk: int,
+    checkpointer,
+    checkpoint_every: int,
+    verbose: bool,
+    metrics_out: dict | None,
+) -> DataFrame:
+    """The whole solve as ONE coalesced union-find pass over the raw edges,
+    which the caller measured to fit one chunk. The kernel emits every
+    vertex — self-loop-only vertices and roots included — with root =
+    component minimum, so its ``(src, dst)`` output read as ``(vertex,
+    component)`` is the final labeling: no star round, universe distinct
+    or labels join. Materialized (one job) as superstep 1; ``owned`` (the
+    raw-input copy, if this solve made one) is freed once it is."""
+    _t = time.time()
+    forest = local_contract(raw.coalesce(1), chunk=chunk, narrow=narrow)
+    as_labels = [F.col("src").alias("vertex"), F.col("dst").alias("component")]
+    if checkpointer is not None and 1 % checkpoint_every == 0:
+        # stored as a (src, dst) frontier, so a resumed solve reads it
+        labels = checkpointer.save(forest, 1).select(*as_labels)
+    else:
+        # labels are read once by the caller: default storage, as the
+        # distributed path's labels job
+        labels = forest.select(*as_labels).localCheckpoint(eager=False)
+    n = labels.count()
+    free_local_checkpoint(owned)
+    if verbose:
+        print(
+            f"[cc] round 1 edges={n} chained=0 {time.time() - _t:.1f}s", flush=True
+        )
+    if checkpointer is not None:
+        checkpointer.log_metrics(1, edges=n, chained=0)
+    if metrics_out is not None:
+        metrics_out.setdefault("superstep_times", []).append(time.time() - _t)
+        metrics_out["supersteps"] = 1
+    return labels
+
+
 def connected_components(
     edges: DataFrame,
     *,
@@ -640,22 +714,42 @@ def connected_components(
     only in self-loops) label themselves. Every vertex occurring in
     ``edges`` appears exactly once in the result.
 
-    ``range_partition`` — range-partition the input by ``src`` before the
-    local pre-contraction. When vertex ids carry locality (scan-order run
-    ids, any id space where neighbors have nearby ids), contiguous id
-    stripes land in one partition and the partition-local union-find
-    collapses whole regions in round 1 — measured on the 2160×3840 grid:
-    13 → 8 global rounds, 80 s → 35 s. Leave off for hash-id graphs
-    (no locality to exploit; the extra shuffle is pure cost).
+    Measure first: unless ``single_partition`` is set or a checkpoint is
+    resumed, the solve starts with ONE job over the raw input (count plus
+    id range; the input is lazily copied first unless it is already a
+    cheap rescan, see ``_cheap_rescan``). When the count fits one
+    union-find chunk under the funnel gate (``n <= min(FUNNEL_EDGE_LIMIT,
+    chunk)``), a single coalesced ``local_contract`` pass over the raw
+    edges IS the final labeling — the kernel emits every vertex (roots
+    and self-loop-only vertices included) with root = component minimum —
+    so the range shuffle, pre-contraction, vertex-universe distinct and
+    labels join are all skipped (the reference's one single-address-space
+    union-find pass, SegmentImageImpl.cpp:78-116). It reports as
+    superstep 1 with ``chained=0``; its ``edges=`` count (verbose line,
+    checkpointer manifest) is the number of label rows it emitted, i.e.
+    the vertex count. A durable ``checkpointer`` saves that pass as step 1
+    (when ``checkpoint_every`` divides 1, like any round 1).
 
-    ``pre_contract`` — run the partition-local union-find over the INPUT
-    partitioning before the star rounds. Defaults to ``range_partition``:
-    on locality-partitioned inputs it collapses whole regions for ~free,
-    but on hash-id graphs the input pass costs a full Arrow transit of the
-    edge set (measured: 25–65 s at 32 M edges) while shrinking round 1's
-    edge count only ~35 % — and on a skew-colocated producer it hands one
-    task the whole hub star (the round-1 stall in BENCH.md's skew section).
-    Pass ``True``/``False`` to override the heuristic either way.
+    ``range_partition`` — graphs above the gate only: range-partition the
+    input by ``src`` before the local pre-contraction. When vertex ids
+    carry locality (scan-order run ids, any id space where neighbors have
+    nearby ids), contiguous id stripes land in one partition and the
+    partition-local union-find collapses whole regions in round 1 —
+    measured on the 2160×3840 grid: 13 → 8 global rounds, 80 s → 35 s.
+    Leave off for hash-id graphs (no locality to exploit; the extra
+    shuffle is pure cost).
+
+    ``pre_contract`` — graphs above the gate only: run the partition-local
+    union-find over the INPUT partitioning before the star rounds, at the
+    transit width the raw measurement picked. Defaults to
+    ``range_partition``: on locality-partitioned inputs it collapses whole
+    regions for ~free, but on hash-id graphs the input pass costs a full
+    Arrow transit of the edge set (measured: 25–65 s at 32 M edges) while
+    shrinking round 1's edge count only ~35 % — and on a skew-colocated
+    producer it hands one task the whole hub star (the round-1 stall in
+    BENCH.md's skew section). Pass ``True``/``False`` to override the
+    heuristic either way. After it, a second count over the contracted
+    edges gates round 1.
 
     ``checkpointer`` — optional ``plans.checkpoint.SuperstepCheckpointer``
     for durable per-superstep state + resume; defaults to in-memory
@@ -672,21 +766,20 @@ def connected_components(
     Still EXACT if the input is larger than one union-find chunk — the
     certificate loop keeps iterating until the forest is terminal — but
     then the single task is the bottleneck; never use it unbounded.
-    Without the hint, the loop reaches the same one-task pass ADAPTIVELY
-    (the frontier funnel) as soon as the measured row count drops to
-    FUNNEL_EDGE_LIMIT — round 1 included, since the init job counts the
-    input; the hint's remaining value is skipping that init job and
+    Without the hint, the solve reaches the same one-task pass ADAPTIVELY:
+    the measure-first one-pass path for inputs under FUNNEL_EDGE_LIMIT,
+    and the loop's frontier funnel as soon as a measured frontier drops
+    to it; the hint's remaining value is skipping the measurement job and
     funneling graphs above the adaptive gate when the caller knows
     better.
 
     ``narrow_ids`` — caller asserts every vertex id fits INT32, routing
-    the Arrow contractions through the half-width transit immediately
-    (see ``local_contract``); useful on paths that skip the init job
-    (``single_partition``) or run a pre-contraction before it
-    (grid pipelines: run ids ≤ cell count, known statically). Without the
-    hint the loop measures the id range on the init job it already pays
-    and narrows automatically. ANSI casts make a violated assertion an
-    error, never a wrong label.
+    the Arrow contractions through the half-width transit without a
+    measurement (see ``local_contract``); useful on the path that skips
+    it (``single_partition``). Without the hint the solve measures the id
+    range on the raw-input job it already pays and narrows automatically.
+    The explicit bound check in ``local_contract`` makes a violated
+    assertion an error, never a wrong label.
 
     Kill switch: session conf ``spark.imtag.cc.narrowTransit`` — ``auto``
     (default, the behavior above) or ``off`` (never use the int32 transit,
@@ -723,98 +816,94 @@ def connected_components(
         )
     if transit == "off":
         narrow_ids = False
-    universe = (
-        edges.select(F.col("src").alias("vertex"))
-        .union(edges.select(F.col("dst").alias("vertex")))
-        .distinct()
-    ).persist()
 
+    _t = time.time()
+    n_work: int | None = None
+    narrow = narrow_ids
+    # the checkpoint behind `work` that THIS solve made (None: a caller-
+    # owned input, whose blocks outlive this solve and are never freed)
+    owned: DataFrame | None = None
+    start_iter = 0
+    resumed = checkpointer.resume() if checkpointer is not None else None
     # No input distinct(): duplicates are harmless to every downstream op
     # (min-aggregates, the union-find), and deduping would shuffle the input
     # to hash(src,dst) — destroying any locality the producer's partitioning
     # carries (e.g. grid edges arrive row-partitioned, so the narrow
     # pre-contraction collapses whole spatial regions before any shuffle).
-    work = edges.where(F.col("src") != F.col("dst"))
-    if single_partition:
+    if resumed is not None:
+        work, start_iter = resumed
+        n_work, narrow = _init_stats(work, narrow, transit)
+    elif single_partition:
         # one task sees every edge; the loop's local_contract round IS the
-        # whole solve, so the input-pass pre-contraction and the range
-        # shuffle would be pure overhead
-        work = work.coalesce(1)
-        pre_contract = False
-        range_partition = False
-    if pre_contract is None:
-        pre_contract = range_partition
-    if range_partition:
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        work = work.repartitionByRange(n_part, "src")
-    if pre_contract:
-        # runs before the init measurement — only a caller-held bound
-        # (narrow_ids) can narrow this pass
-        work = local_contract(work, narrow=narrow_ids).where(
-            F.col("src") != F.col("dst")
-        )
+        # whole solve — the measurement job, the input-pass pre-contraction
+        # and the range shuffle would be pure overhead
+        work = edges.where(F.col("src") != F.col("dst")).coalesce(1)
+    else:
+        # Measure first, over the RAW edges. Lazy checkpoint + count is one
+        # materialization job that also yields the edge count and the id
+        # range. Skip the copy when the input is ALREADY a materialized
+        # scan (a caller-side checkpoint/local relation under at most a
+        # projection/filter): the plan is as flat as a checkpoint would
+        # make it, re-reading it per round is as cheap as reading the copy,
+        # and the copy itself is round 1's single largest stage at 64M
+        # edges (~160 task-core-seconds of pure block duplication). Labels
+        # only ever move DOWN to existing vertex ids, so the measured
+        # bounds hold for every later pass's intermediates.
+        raw = edges
+        if not _cheap_rescan(raw):
+            raw = owned = frontier_checkpoint(raw, eager=False)
+        n_work, narrow = _init_stats(raw, narrow, transit)
+        if n_work <= min(FUNNEL_EDGE_LIMIT, _contract_chunk):
+            if verbose:
+                print(f"[cc] init n={n_work} {time.time() - _t:.1f}s", flush=True)
+            return _solve_one_pass(
+                raw, owned, narrow, _contract_chunk, checkpointer,
+                checkpoint_every, verbose, metrics_out,
+            )
+        work = raw.where(F.col("src") != F.col("dst"))
+        if pre_contract is None:
+            pre_contract = range_partition
+        if range_partition:
+            n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            work = work.repartitionByRange(n_part, "src")
+        if pre_contract:
+            work = local_contract(work, narrow=narrow).where(
+                F.col("src") != F.col("dst")
+            )
+        if range_partition or pre_contract:
+            # the post-contraction count gates round 1 (funnel, reuse
+            # round); the raw copy is dead once this checkpoint exists
+            work = frontier_checkpoint(work, eager=False)
+            n_work = work.count()
+            free_local_checkpoint(owned)
+            owned = work
+        # else: round 1 reads the raw copy; n_work counts its self-loops
+        # too, a safe upper bound for the row-count gates
+    if verbose:
+        print(f"[cc] init n={n_work} {time.time() - _t:.1f}s", flush=True)
 
+    universe = (
+        edges.select(F.col("src").alias("vertex"))
+        .union(edges.select(F.col("dst").alias("vertex")))
+        .distinct()
+    ).persist()
     if broadcast_mins and not single_partition:
         # enforce the documented bound: one count against the persisted
         # universe; above it a per-round V-row broadcast would be multi-GB
         broadcast_mins = universe.count() <= CC_BROADCAST_VERTEX_LIMIT
 
-    start_iter = 0
-    resumed = checkpointer.resume() if checkpointer is not None else None
-    if resumed is not None:
-        work, start_iter = resumed
-
-    # Iterate with persist() (materialized by the fingerprint action — one
-    # Spark job per round) and truncate lineage only every
-    # ``checkpoint_every`` rounds: plan analysis cost stays bounded without
-    # paying a per-round checkpoint job.
-    import time as _time
-
     # Lineage MUST be truncated every round: each star round's plan embeds
     # the previous round's plan several times (sym appears in both the
     # groupBy and the join side), so without truncation Catalyst analysis
-    # cost grows exponentially with rounds. Eager localCheckpoint gives a
-    # flat plan per round; the durable checkpointer (parquet) replaces it
-    # every `checkpoint_every` rounds when resumability is requested.
-    _t = _time.time()
-    n_work: int | None = None
-    narrow = narrow_ids
-    owns_frontier = False  # True once `work` is a checkpoint THIS solve made
-    if not single_partition:
-        # single-partition mode converges in ~1 round off a trivial plan
-        # (coalesce of the source) — the init truncation job is pure cost.
-        # Lazy checkpoint + count = the SAME single materialization job as
-        # the old eager checkpoint, but it also yields the edge count that
-        # gates the exchange-shared round structure below.
-        #
-        # Skip the copy when the input is ALREADY a materialized scan
-        # (a caller-side checkpoint/local relation under at most a
-        # projection/filter): the plan is as flat as a checkpoint would
-        # make it, re-reading it per round is as cheap as reading the
-        # copy, and the copy itself is round 1's single largest stage at
-        # 64M edges (~160 task-core-seconds of pure block duplication).
-        # The init action doubles as the id-range measurement for the
-        # narrow Arrow transit: same single materialization job, three
-        # ride-along scalar aggregates instead of one. Labels only ever
-        # move DOWN to existing vertex ids, so init bounds hold for every
-        # round's intermediates.
-        if not _cheap_rescan(work):
-            work = frontier_checkpoint(work, eager=False)
-            owns_frontier = True
-        stats = work.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(F.least("src", "dst")).alias("lo"),
-            F.max(F.greatest("src", "dst")).alias("hi"),
-        ).collect()[0]
-        n_work = int(stats["n"])
-        if transit != "off" and not narrow and stats["lo"] is not None:
-            narrow = -(2**31) <= int(stats["lo"]) and int(stats["hi"]) < 2**31
-    if verbose:
-        print(f"[cc] init n={n_work} {_time.time() - _t:.1f}s", flush=True)
+    # cost grows exponentially with rounds. A lazy localCheckpoint
+    # materialized by the round's certificate gives a flat plan per round
+    # at one Spark job per round; the durable checkpointer (parquet)
+    # replaces it every `checkpoint_every` rounds when resumability is
+    # requested.
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     chain_patch: DataFrame | None = None
     for it in range(start_iter, max_iter):
-        _t = _time.time()
+        _t = time.time()
         round_caches: list[DataFrame] = []
         funneled = False
         patched_chained = 0  # true witness count a terminal-tail patch absorbed
@@ -881,15 +970,14 @@ def connected_components(
         # showed the superseded copies accumulating across long runs).
         # NEVER free a caller-owned input (init-copy skipped): its blocks
         # outlive this solve.
-        if owns_frontier:
-            free_local_checkpoint(work)
-        owns_frontier = True  # every loop frontier from here on is ours
+        free_local_checkpoint(owned)
+        owned = stepped  # every loop frontier from here on is ours
         n_work = n_edges  # next round's reuse gate, free off the certificate
         if verbose:
             patch_note = f" (patched {patched_chained})" if patched_chained else ""
             print(
                 f"[cc] round {it + 1} edges={n_edges} chained={chained}"
-                f"{patch_note} {_time.time() - _t:.1f}s",
+                f"{patch_note} {time.time() - _t:.1f}s",
                 flush=True,
             )
         if checkpointer is not None:
@@ -906,7 +994,7 @@ def connected_components(
             else:
                 checkpointer.log_metrics(it + 1, edges=n_edges, chained=chained)
         if metrics_out is not None:
-            metrics_out.setdefault("superstep_times", []).append(_time.time() - _t)
+            metrics_out.setdefault("superstep_times", []).append(time.time() - _t)
             metrics_out["supersteps"] = it + 1
         work = stepped
         if chained == 0:
@@ -917,7 +1005,6 @@ def connected_components(
     # work is now a star forest oriented (member -> root) — possibly up to
     # the driver-resolved chain patch, applied here as a broadcast mapping
     # on dst (a narrow projection inside the one labels job).
-    bare_forest = work  # the checkpoint handle to free (work may be rewrapped)
     if chain_patch is not None:
         # The mapping's own (_old → _new) pairs ride along as member rows:
         # a pre-patch root r whose component merged downward appears in the
@@ -943,5 +1030,5 @@ def connected_components(
     )  # labels are wide-ish and read once by the caller: default storage
     universe.unpersist()
     # the labels are materialized — the terminal star forest is dead too
-    free_local_checkpoint(bare_forest)
+    free_local_checkpoint(owned)
     return out

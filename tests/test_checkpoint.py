@@ -127,3 +127,31 @@ def test_manifest_records_true_witnesses_when_patch_fires(
         for v in manifest["steps"].values()
         if v not in patched_steps
     )
+
+
+def test_one_pass_solve_checkpoints_step_one_and_resumes(spark, tmp_path):
+    # a graph under the funnel gate is labeled in ONE measured Arrow pass;
+    # with a durable checkpointer that pass is superstep 1 of the manifest
+    # (chained=0, edges = label rows), and a solve resuming from it returns
+    # identical labels
+    root = str(tmp_path / "cc")
+    edges = _chain_edges(spark)
+    ckpt = SuperstepCheckpointer(spark, root)
+    m: dict = {}
+    expected = _labels_dict(
+        connected_components(edges, checkpointer=ckpt, checkpoint_every=1,
+                             metrics_out=m)
+    )
+    assert m["supersteps"] == 1
+    assert len(expected) == 5000 and set(expected.values()) == {0}
+    manifest = json.loads(ckpt.manifest_path.read_text())
+    assert manifest["last_step"] == 1
+    assert manifest["steps"]["1"]["chained"] == 0
+    assert manifest["steps"]["1"]["edges"] == 5000
+
+    resumed_ckpt = SuperstepCheckpointer(spark, root)
+    assert resumed_ckpt.resume()[1] == 1
+    resumed = _labels_dict(
+        connected_components(edges, checkpointer=resumed_ckpt, checkpoint_every=1)
+    )
+    assert resumed == expected

@@ -11,7 +11,7 @@ from imtag_spark.operators.lpa import label_propagation
 from imtag_spark.operators.pagerank import pagerank
 from imtag_spark.operators.stats import degrees
 from imtag_spark.operators.triangles import total_triangles, triangle_count
-from oracles import brute_triangles, numpy_pagerank
+from oracles import brute_triangles, cc_min_label, numpy_pagerank
 
 TWO_TRIANGLES_BRIDGE = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (4, 6)]
 
@@ -61,24 +61,51 @@ def test_cc_single_partition_matches_default(spark):
 
 
 def test_cc_reuse_round_matches_default(spark, monkeypatch):
-    # the exchange-shared round structure (with its second hash(src)
-    # contraction) only engages above REUSE_EDGE_LIMIT in production;
-    # force it here and require exact label parity on a multi-round graph
-    # (random + long path tail)
+    # The default solve labels this sub-gate graph in ONE measured Arrow
+    # pass; the distributed rounds only engage above FUNNEL_EDGE_LIMIT (the
+    # flat star round) and REUSE_EDGE_LIMIT (the exchange-shared round with
+    # its second hash(src) contraction) in production. Force each and
+    # require exact label parity on a multi-round graph (random + long
+    # path tail) carrying self-loop-only vertices, duplicate edges,
+    # negative ids and ids >= 2^31 (so every pass takes the int64 transit).
     import imtag_spark.operators.cc as cc_mod
 
     rng = np.random.default_rng(23)
     pairs = rng.integers(0, 500, size=(1200, 2)).tolist()
     pairs += [(1000 + i, 1000 + i + 1) for i in range(300)]
+    big = 2**40
+    pairs += [(-7, 3), (-7, 3), (-9, -9), (big, big + 1), (big + 1, big),
+              (big + 2, big + 2), (big + 1, 1100), (4, 4), (4, 4)]
     e = edges_df(spark, pairs)
-    base = {r.vertex: r.component for r in connected_components(e).collect()}
-    monkeypatch.setattr(cc_mod, "REUSE_EDGE_LIMIT", 0)
     m: dict = {}
-    reuse = {
+    base = {
         r.vertex: r.component
         for r in connected_components(e, metrics_out=m, max_iter=20).collect()
     }
+    assert m["supersteps"] == 1
+    verts = np.unique(np.array(pairs, dtype=np.int64))
+    idx = {int(v): i for i, v in enumerate(verts)}
+    oracle = cc_min_label(len(verts), [(idx[a], idx[b]) for a, b in pairs])
+    assert base == {int(v): int(verts[oracle[i]]) for i, v in enumerate(verts)}
+    assert base[-9] == -9 and base[big + 2] == big + 2 and base[big] == 1000
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
+    flat = {
+        r.vertex: r.component
+        for r in connected_components(e, max_iter=20).collect()
+    }
+    assert flat == base
+    monkeypatch.setattr(cc_mod, "REUSE_EDGE_LIMIT", 0)
+    reuse = {
+        r.vertex: r.component
+        for r in connected_components(e, max_iter=20).collect()
+    }
     assert reuse == base
+
+
+def test_cc_empty_edges(spark):
+    labels = connected_components(edges_df(spark, []))
+    assert labels.columns == ["vertex", "component"]
+    assert labels.collect() == []
 
 
 def test_cc_broadcast_mins_matches_default(spark):
@@ -498,6 +525,22 @@ def test_cc_narrow_transit_kill_switch(spark, monkeypatch):
             connected_components(e, max_iter=20)
     finally:
         spark.conf.unset("spark.imtag.cc.narrowTransit")
+
+
+def test_cc_narrow_hint_violated_raises_without_ansi(spark):
+    # the narrow transit's bound is checked explicitly: with ANSI off a
+    # plain int cast would wrap 2^40 to 0 and mislabel — it must raise
+    e = edges_df(spark, [(2**40, 1)])
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        for single in (False, True):
+            with pytest.raises(Exception, match="outside the int32 range"):
+                connected_components(
+                    e, single_partition=single, narrow_ids=True
+                ).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 def test_cc_narrow_hint_violated_raises(spark):
