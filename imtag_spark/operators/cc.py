@@ -667,17 +667,20 @@ def _solve_one_pass(
     component minimum, so its ``(src, dst)`` output read as ``(vertex,
     component)`` is the final labeling: no star round, universe distinct
     or labels join. Materialized (one job) as superstep 1; ``owned`` (the
-    raw-input copy, if this solve made one) is freed once it is."""
+    raw-input copy, if this solve made one) is freed once it is. The
+    returned labels live in executor memory either way — like the
+    distributed path's, they never depend on checkpoint files, which the
+    caller may delete once the solve returns."""
     _t = time.time()
     forest = local_contract(raw.coalesce(1), chunk=chunk, narrow=narrow)
-    as_labels = [F.col("src").alias("vertex"), F.col("dst").alias("component")]
     if checkpointer is not None and 1 % checkpoint_every == 0:
         # stored as a (src, dst) frontier, so a resumed solve reads it
-        labels = checkpointer.save(forest, 1).select(*as_labels)
-    else:
-        # labels are read once by the caller: default storage, as the
-        # distributed path's labels job
-        labels = forest.select(*as_labels).localCheckpoint(eager=False)
+        forest = checkpointer.save(forest, 1)
+    # labels are read once by the caller: default storage, as the
+    # distributed path's labels job
+    labels = forest.select(
+        F.col("src").alias("vertex"), F.col("dst").alias("component")
+    ).localCheckpoint(eager=False)
     n = labels.count()
     free_local_checkpoint(owned)
     if verbose:

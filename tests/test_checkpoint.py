@@ -4,6 +4,7 @@ k, restart from the parquet manifest, get byte-identical final labels."""
 from __future__ import annotations
 
 import json
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -138,10 +139,9 @@ def test_one_pass_solve_checkpoints_step_one_and_resumes(spark, tmp_path):
     edges = _chain_edges(spark)
     ckpt = SuperstepCheckpointer(spark, root)
     m: dict = {}
-    expected = _labels_dict(
-        connected_components(edges, checkpointer=ckpt, checkpoint_every=1,
-                             metrics_out=m)
-    )
+    first = connected_components(edges, checkpointer=ckpt, checkpoint_every=1,
+                                 metrics_out=m)
+    expected = _labels_dict(first)
     assert m["supersteps"] == 1
     assert len(expected) == 5000 and set(expected.values()) == {0}
     manifest = json.loads(ckpt.manifest_path.read_text())
@@ -151,7 +151,13 @@ def test_one_pass_solve_checkpoints_step_one_and_resumes(spark, tmp_path):
 
     resumed_ckpt = SuperstepCheckpointer(spark, root)
     assert resumed_ckpt.resume()[1] == 1
-    resumed = _labels_dict(
-        connected_components(edges, checkpointer=resumed_ckpt, checkpoint_every=1)
+    resumed = connected_components(
+        edges, checkpointer=resumed_ckpt, checkpoint_every=1
     )
-    assert resumed == expected
+    assert _labels_dict(resumed) == expected
+
+    # the returned labels are materialized in memory: deleting the
+    # checkpoint root (a caller's temporary directory) leaves them readable
+    shutil.rmtree(root)
+    assert _labels_dict(first) == expected
+    assert _labels_dict(resumed) == expected

@@ -527,25 +527,19 @@ def test_cc_narrow_transit_kill_switch(spark, monkeypatch):
         spark.conf.unset("spark.imtag.cc.narrowTransit")
 
 
-def test_cc_narrow_hint_violated_raises_without_ansi(spark):
-    # the narrow transit's bound is checked explicitly: with ANSI off a
-    # plain int cast would wrap 2^40 to 0 and mislabel — it must raise
+def test_cc_narrow_hint_violated_raises(spark):
+    # a lying narrow_ids bound must ERROR, never silently wrap into a wrong
+    # label — the bound is checked explicitly, so this holds with ANSI off
+    # too (where a plain int cast would wrap 2^40 to 0)
     e = edges_df(spark, [(2**40, 1)])
     prev = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
     try:
-        for single in (False, True):
-            with pytest.raises(Exception, match="outside the int32 range"):
-                connected_components(
-                    e, single_partition=single, narrow_ids=True
-                ).collect()
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            for single in (False, True):
+                with pytest.raises(Exception, match="outside the int32 range"):
+                    connected_components(
+                        e, single_partition=single, narrow_ids=True
+                    ).collect()
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
-
-
-def test_cc_narrow_hint_violated_raises(spark):
-    # a lying narrow_ids bound must ERROR (ANSI cast overflow), never
-    # silently wrap into a wrong label
-    e = edges_df(spark, [(2**40, 1)])
-    with pytest.raises(Exception, match="(?i)overflow|cast|ansi"):
-        connected_components(e, single_partition=True, narrow_ids=True)
